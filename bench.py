@@ -34,7 +34,9 @@ def _cpu_ticks():
         with open("/proc/stat") as f:
             parts = f.readline().split()
         vals = [int(x) for x in parts[1:]]
-        total = sum(vals)
+        # user .. steal only: guest and guest_nice are already counted in
+        # user and nice, so summing them would deflate the steal share
+        total = sum(vals[:8])
         idle = vals[3] + (vals[4] if len(vals) > 4 else 0)  # idle + iowait
         steal = vals[7] if len(vals) > 7 else 0
         return total, steal, idle

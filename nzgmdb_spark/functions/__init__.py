@@ -89,19 +89,3 @@ def haversine_km(lat1: Column, lon1: Column, lat2: Column, lon2: Column) -> Colu
     dlam = F.radians(lon2 - lon1)
     a = F.sin(dphi / 2) ** 2 + F.cos(phi1) * F.cos(phi2) * F.sin(dlam / 2) ** 2
     return F.lit(2 * r) * F.asin(F.sqrt(a))
-
-
-def make_record_id(evid: Column, sta: Column, chan: Column, loc: Column) -> Column:
-    """record_id = {evid}_{sta}_{chan[:2]}_{loc} (reference: creation.py:199)."""
-    return F.concat_ws("_", evid, sta, F.substring(chan, 1, 2), loc)
-
-
-def split_record_id(record_id: Column) -> list[Column]:
-    """Decompose record_id → (evid, sta, chan, loc) (merge_flatfiles.py:88-91)."""
-    parts = F.split(record_id, "_")
-    return [
-        parts.getItem(0).alias("evid"),
-        parts.getItem(1).alias("sta"),
-        parts.getItem(2).alias("chan"),
-        parts.getItem(3).alias("loc"),
-    ]

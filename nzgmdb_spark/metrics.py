@@ -108,11 +108,3 @@ def run_full(df) -> int:
         F.count(F.lit(1)).alias("n"), F.max(F.xxhash64(*cols)).alias("chk")
     ).collect()[0]
     return row.n
-
-
-def fmt_bytes(n: int) -> str:
-    for unit in ("B", "KiB", "MiB", "GiB"):
-        if abs(n) < 1024:
-            return f"{n:.0f} {unit}" if unit == "B" else f"{n:.1f} {unit}"
-        n /= 1024
-    return f"{n:.1f} TiB"

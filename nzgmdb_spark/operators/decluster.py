@@ -89,20 +89,6 @@ def resample_polygon_km(
     return pts
 
 
-def _point_in_polygon(lat: float, lon: float, corners: list[tuple[float, float]]) -> bool:
-    """Ray casting in (lon, lat) plane."""
-    inside = False
-    n = len(corners)
-    for i in range(n):
-        y1, x1 = corners[i]
-        y2, x2 = corners[(i + 1) % n]
-        if (y1 > lat) != (y2 > lat):
-            x_int = x1 + (lat - y1) / (y2 - y1) * (x2 - x1)
-            if lon < x_int:
-                inside = not inside
-    return inside
-
-
 from collections import OrderedDict
 
 _BOUNDARY_CACHE: OrderedDict = OrderedDict()
@@ -652,11 +638,6 @@ def decluster(
     return events_df.join(F.broadcast(flags), "evid", "left")
 
 
-def decimal_year_py(ts_epoch_s: float, year: int, year_start_s: float, year_end_s: float) -> float:
-    """Scalar twin of functions.decimal_year for driver-side checks."""
-    return year + (ts_epoch_s - year_start_s) / (year_end_s - year_start_s)
-
-
 # Measured dead end (round 8, do not retry without new evidence): a SQL
 # ray-cast inside-test auto-accept (points inside the polygon have
 # CRJB = 0 by definition) fired on 39% of the 1M-catalog's 18.7M
@@ -673,10 +654,7 @@ def decluster_distributed(
     corners_by_evid: dict[str, list[tuple[float, float]]] | None = None,
     crjb_cutoff_km: float = 10.0,
     max_rounds: int = 64,
-    driver_collect_cap: int = 1_000_000,
-    b2_on_driver: bool = False,
     stats: dict | None = None,
-    prune_edges: bool | None = None,
 ) -> DataFrame:
     """Distributed declustering, exact-equivalent to the sequential greedy.
 
@@ -704,8 +682,7 @@ def decluster_distributed(
        claimer counts, with each round joining only the edges of the
        claimers decided in the previous round — every edge is processed
        exactly once across the fixpoint, and rounds needed = longest
-       claim-chain depth, not catalog size. ``prune_edges`` is retired
-       (accepted and ignored): per-edge-once leaves nothing to prune.
+       claim-chain depth, not catalog size.
     3. **Claim assignment** — derived in one pass: a claimed event's
        claimer is the minimum-priority eligible mainshock (the first one
        processed). A second tiny fixpoint resolves the equal-magnitude
@@ -1473,8 +1450,7 @@ def decluster_distributed(
     # becomes a mainshock (true) in the round after its LAST claimer
     # decides false, and false takes precedence inside a round — exactly
     # the has_m-before-has_u precedence of the old update (parity pinned
-    # by the randomized sequential-equality tests). ``prune_edges`` is
-    # retired: with per-edge-once processing there is nothing to prune.
+    # by the randomized sequential-equality tests).
     ep0 = (
         pairs.filter(F.col("k_prio") < F.col("j_prio"))
         .select("k_prio", "j_prio")
@@ -1614,13 +1590,12 @@ def decluster_distributed(
     # reference's ``cluster[j] != cluster[i]`` guard, aftershocks.py:222-308).
     # The candidate set is both-mainshock, equal-magnitude, in-window,
     # in-CRJB pairs — a degenerate sliver of the catalog — and its claims
-    # interleave with early claims in strict priority order, so it is
-    # resolved exactly on the driver: iterate pairs by claimer priority
-    # (= processing order); a claimer takes a target unless the target
-    # already claimed something (immune) or was taken by an earlier
-    # claimer. Every late claimer is genuinely mainshock-at-turn (an
-    # earlier-priority claim would have flipped it in Phase A), so no
-    # further conditions apply.
+    # interleave with early claims in strict priority order: taking pairs
+    # by claimer priority (= processing order), a claimer takes a target
+    # unless the target already claimed something (immune) or was taken
+    # by an earlier claimer. Every late claimer is genuinely
+    # mainshock-at-turn (an earlier-priority claim would have flipped it in
+    # Phase A), so no further conditions apply.
     prio_evid = e.select("prio", F.col("evid").alias("p_evid"))
     late_df = (
         pairs.filter(
@@ -1644,73 +1619,48 @@ def decluster_distributed(
     # nothing (neither an early B1 claim nor a successful late claim) and
     # no earlier late claim took j. Each round decides every pair whose
     # dependencies are settled — rounds = longest claim-chain depth, and
-    # NO pair data ever moves through the driver (the round-2 seam,
-    # retired; set b2_on_driver=True for the legacy capped driver path).
+    # NO pair data ever moves through the driver.
     early_claimers = early.select(F.col("claimer_prio").alias("prio")).distinct()
-    if b2_on_driver:
-        n_late = late_df.count()
-        if n_late > driver_collect_cap:
-            raise RuntimeError(
-                f"decluster Phase B2 sliver has {n_late} pairs "
-                f"(> driver_collect_cap={driver_collect_cap}); the catalog's "
-                "equal-magnitude mainshock structure is degenerate — use the "
-                "default distributed B2 resolution"
-            )
-        late_rows = late_df.collect()
-        has_claims_prios = {
-            r.prio for r in early_claimers.collect()
-        }
-        late_assign: dict[int, int] = {}
-        for kp, jp in sorted((r.k_prio, r.j_prio) for r in late_rows):
-            if jp in late_assign or jp in has_claims_prios:
-                continue
-            late_assign[jp] = kp
-            has_claims_prios.add(kp)
-        succ = spark.createDataFrame(
-            [(int(c), int(j)) for j, c in late_assign.items()],
-            schema="k_prio int, j_prio int",
+    pend = late_df
+    succ = spark.createDataFrame([], schema="k_prio int, j_prio int")
+    for _ in range(max_rounds):
+        if pend.count() == 0:
+            break
+        if stats is not None:
+            stats["rounds_b2"] = stats.get("rounds_b2", 0) + 1
+        earlier_same_target = pend.select(
+            F.col("k_prio").alias("e_k"), F.col("j_prio").alias("e_j")
         )
+        target_as_claimer = pend.select(F.col("k_prio").alias("t_k")).distinct()
+        ready = pend.join(
+            earlier_same_target,
+            (F.col("e_j") == F.col("j_prio")) & (F.col("e_k") < F.col("k_prio")),
+            "left_anti",
+        ).join(
+            target_as_claimer, F.col("t_k") == F.col("j_prio"), "left_anti"
+        )
+        # immunity from ALREADY-DECIDED state only (readiness guarantees
+        # everything relevant is decided): targets that claimed, or were
+        # taken by an earlier (decided) late claim
+        claimed_something = early_claimers.unionByName(
+            succ.select(F.col("k_prio").alias("prio"))
+        ).distinct()
+        taken = succ.select("j_prio").distinct()
+        ready_succ = ready.join(
+            claimed_something, F.col("prio") == F.col("j_prio"), "left_anti"
+        ).join(taken, "j_prio", "left_anti")
+        succ = succ.unionByName(
+            ready_succ.select(
+                F.col("k_prio").cast("int"), F.col("j_prio").cast("int")
+            )
+        ).localCheckpoint()
+        pend = pend.join(ready, ["k_prio", "j_prio"], "left_anti").localCheckpoint()
     else:
-        pend = late_df
-        succ = spark.createDataFrame([], schema="k_prio int, j_prio int")
-        for _ in range(max_rounds):
-            if pend.count() == 0:
-                break
-            if stats is not None:
-                stats["rounds_b2"] = stats.get("rounds_b2", 0) + 1
-            earlier_same_target = pend.select(
-                F.col("k_prio").alias("e_k"), F.col("j_prio").alias("e_j")
+        if pend.count() != 0:
+            raise RuntimeError(
+                f"decluster B2 fixpoint did not converge in {max_rounds} "
+                "rounds — claim-chain depth exceeds the bound"
             )
-            target_as_claimer = pend.select(F.col("k_prio").alias("t_k")).distinct()
-            ready = pend.join(
-                earlier_same_target,
-                (F.col("e_j") == F.col("j_prio")) & (F.col("e_k") < F.col("k_prio")),
-                "left_anti",
-            ).join(
-                target_as_claimer, F.col("t_k") == F.col("j_prio"), "left_anti"
-            )
-            # immunity from ALREADY-DECIDED state only (readiness guarantees
-            # everything relevant is decided): targets that claimed, or were
-            # taken by an earlier (decided) late claim
-            claimed_something = early_claimers.unionByName(
-                succ.select(F.col("k_prio").alias("prio"))
-            ).distinct()
-            taken = succ.select("j_prio").distinct()
-            ready_succ = ready.join(
-                claimed_something, F.col("prio") == F.col("j_prio"), "left_anti"
-            ).join(taken, "j_prio", "left_anti")
-            succ = succ.unionByName(
-                ready_succ.select(
-                    F.col("k_prio").cast("int"), F.col("j_prio").cast("int")
-                )
-            ).localCheckpoint()
-            pend = pend.join(ready, ["k_prio", "j_prio"], "left_anti").localCheckpoint()
-        else:
-            if pend.count() != 0:
-                raise RuntimeError(
-                    f"decluster B2 fixpoint did not converge in {max_rounds} "
-                    "rounds — claim-chain depth exceeds the bound"
-                )
     _mark("t_b2")
     claims = early.unionByName(
         succ.select("j_prio", F.col("k_prio").alias("claimer_prio"))

@@ -9,8 +9,6 @@ hash-matching before the driver ever sees it.
 
 from __future__ import annotations
 
-import math
-
 import duckdb
 import pandas as pd
 
@@ -91,9 +89,3 @@ def check_query(name: str, sf_dir: str, spark) -> list[str]:
         return [] if len(spark_pdf) >= 0 else ["spark query failed"]
     oracle_pdf = run_oracle(spec.sql, sf_dir)
     return compare(spark_pdf, oracle_pdf)
-
-
-def _fmt(v: object) -> str:
-    if isinstance(v, float) and math.isnan(v):
-        return "NaN"
-    return repr(v)

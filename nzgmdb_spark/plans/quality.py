@@ -126,15 +126,3 @@ def run_quality_chain(
         skipped_all = skipped if skipped_all is None else skipped_all.unionByName(skipped)
     assert skipped_all is not None
     return df, skipped_all
-
-
-def refilter_by_survivors(
-    tables: dict[str, DataFrame], kept: DataFrame, key: str = "record_id"
-) -> dict[str, DataFrame]:
-    """Re-filter downstream flatfiles to surviving keys (reference
-    quality_db.py:15-88, P4 semi-join)."""
-    keys = kept.select(key).distinct()
-    return {
-        name: t.join(F.broadcast(keys), key, "left_semi") if key in t.columns else t
-        for name, t in tables.items()
-    }

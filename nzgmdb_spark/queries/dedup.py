@@ -1512,8 +1512,7 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash_blocks(d: DataFrame) -> DataFrame:
     """48-bit TF-weighted simhash signatures exploded into the 4 Manku
     pigeonhole blocks — the candidate-generation input of
-    simhash_hamming_pairs, exposed so tools/simhash_growth_probe.py can
-    measure block-bucket and candidate cardinality at scale."""
+    simhash_hamming_pairs."""
     tf = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .groupBy("doc_id", "tok")

@@ -50,7 +50,7 @@ def get_spark(
         # unsorted removes the sort buffers that dominated the widest
         # fact-fact joins: q5's 60M-row lineitem⋈orders SMJ build peaked
         # at 10.0 GiB at the sf10 probe scale, 3.1 GiB (and ~5x faster)
-        # with the conversion on (tools/q5_join_audit.py). 128m bounds
+        # with the conversion on (SCALING.md, sf10 section). 128m bounds
         # worst-case concurrent build maps at 32 tasks to ~4 GiB; joins
         # whose maps exceed it keep the spill-graceful SMJ.
         .config(

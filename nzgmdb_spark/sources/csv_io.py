@@ -66,38 +66,3 @@ def read_whitespace_table(
         .option("comment", comment)
         .csv(path)
     )
-
-
-def read_remote_csv(
-    spark: SparkSession,
-    url: str,
-    schema: StructType | str,
-    fetch=None,
-) -> DataFrame:
-    """S6: remote CSV-over-HTTP scan (reference reads CMT / NZSMDB dims by
-    URL, tect_domain.py:399). Driver-side fetch → parallelize: these are
-    small static dimension tables, so shipping them through the driver and
-    broadcasting downstream is the right topology — a distributed read of a
-    single HTTP object would still serialize on the server.
-
-    ``fetch(url) -> str`` is injectable for offline tests; default urllib.
-    """
-    if fetch is None:
-        from urllib.request import urlopen
-
-        def fetch(u: str) -> str:
-            with urlopen(u, timeout=60) as r:  # noqa: S310
-                return r.read().decode("utf-8")
-
-    text = fetch(url)
-    lines = [ln for ln in text.splitlines() if ln.strip()]
-    header, rows = lines[0].split(","), lines[1:]
-    rdd = spark.sparkContext.parallelize(rows, 1)
-    df = spark.read.schema(schema).option("header", False).csv(rdd)
-    # Sanity: remote header must agree with the declared schema's order.
-    declared = [f.name for f in df.schema.fields]
-    if [h.strip() for h in header] != declared:
-        raise ValueError(
-            f"remote CSV header {header} != declared schema {declared}"
-        )
-    return df

@@ -35,12 +35,18 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # vectorized parquet reader rejects; newer builds store TIMESTAMP(US).
         # Read with nanosAsLong enabled (a no-op for micros) and downcast only
         # when ts actually surfaces as a long, matching DuckDB's
-        # TIMESTAMP_NS → TIMESTAMP coercion.
+        # TIMESTAMP_NS → TIMESTAMP coercion. The setting is scoped to this
+        # read: the caller's session config is restored before returning.
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        key = "spark.sql.legacy.parquet.nanosAsLong"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "true")
+        try:
+            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        finally:
+            spark.conf.set(key, prev)
         if isinstance(df.schema["ts"].dataType, T.LongType):
             # integer `div`, not double `/`: epoch-nanos exceed double's 2^53
             # exact-integer range, so float division would corrupt microseconds.
@@ -53,7 +59,3 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
         return df
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: tbl(spark, sf_dir, name) for name in TABLE_NAMES}

@@ -505,14 +505,13 @@ def test_distributed_bucketed_join_crosses_buckets(spark):
     )
 
 
-def test_b2_equal_magnitude_chain_distributed_and_driver_match_sequential(spark):
+def test_b2_equal_magnitude_chain_distributed_matches_sequential(spark):
     """Round-3: the B2 equal-magnitude resolution is a distributed
     dependency-ordered fixpoint (no pair data through the driver). Build a
     catalog that is ALL B2: equal magnitudes, co-located, times strictly
     decreasing with evid, so phase A claims nothing and late claims chain
-    (B claims A; C blocked on both; D claims C) — 3 fixpoint rounds. Both
-    the distributed resolution and the legacy capped driver path must match
-    the sequential reference exactly."""
+    (B claims A; C blocked on both; D claims C) — 3 fixpoint rounds. The
+    distributed resolution must match the sequential reference exactly."""
     from nzgmdb_spark.operators.decluster import decluster_distributed
 
     events = []
@@ -536,19 +535,16 @@ def test_b2_equal_magnitude_chain_distributed_and_driver_match_sequential(spark)
     )
     corners = {e["evid"]: e["corners"] for e in events}
     evids = sorted(e["evid"] for e in events)
-    for driver_mode in (False, True):
-        out = decluster_distributed(
-            df, corners, crjb_cutoff_km=10.0, b2_on_driver=driver_mode
-        )
-        got = {r.evid: r for r in out.collect()}
-        assert [got[e].aftershock_flag for e in evids] == a_seq, (
-            f"b2_on_driver={driver_mode}"
-        )
-        assert _partitions(evids, [got[e].cluster_evid for e in evids]) == _partitions(
-            evids, c_seq
-        ), f"b2_on_driver={driver_mode}"
+    stats: dict = {}
+    out = decluster_distributed(df, corners, crjb_cutoff_km=10.0, stats=stats)
+    got = {r.evid: r for r in out.collect()}
+    assert [got[e].aftershock_flag for e in evids] == a_seq
+    assert _partitions(evids, [got[e].cluster_evid for e in evids]) == _partitions(
+        evids, c_seq
+    )
     # the structure really is the intended chain: B claims A, D claims C
     assert a_seq == [1, 0, 1, 0]
+    assert stats["rounds_b2"] == 3
 
 
 def test_distributed_100k_catalog_bounded_rounds(spark):
@@ -651,10 +647,7 @@ def test_distributed_edge_compaction_fires_and_matches_sequential(spark):
     assert lives[0] < stats["pairs_eligible"]
 
 
-def test_distributed_prune_edges_matches_sequential(spark):
-    # prune_edges is retired (the delta fixpoint processes each edge once,
-    # so there is nothing to prune) but stays accepted for signature
-    # compatibility; passing it must remain a harmless no-op.
+def test_distributed_seed41_catalog_matches_sequential(spark):
     from nzgmdb_spark.operators.decluster import decluster_distributed
 
     events = _random_catalog(150, seed=41)
@@ -665,7 +658,7 @@ def test_distributed_prune_edges_matches_sequential(spark):
         ["evid", "datetime", "mag", "lat", "lon"],
     )
     corners = {e["evid"]: e["corners"] for e in events}
-    out = decluster_distributed(df, corners, crjb_cutoff_km=10.0, prune_edges=True)
+    out = decluster_distributed(df, corners, crjb_cutoff_km=10.0)
     got = {r.evid: r for r in out.collect()}
     evids = [e["evid"] for e in events]
     assert [got[e].aftershock_flag for e in evids] == a_seq

@@ -13,9 +13,8 @@
 #   4. BENCH_idle_r{N}.json — builder-side idle-box bench record
 #      (the driver's BENCH_r{N}.json is measured on its own schedule;
 #      this one documents the idle-box number for the same code)
-# SCALING.md / sf10 evidence are NOT here: regenerate those via
-# tools/gen_scaling.py + tools/sf10_probe.py when scale-relevant code
-# changed (they cost 1-2 h; see SCALING.md header).
+# SCALING.md is a frozen record with no generator; performance evidence
+# comes from perfbench/ (python3 perfbench/run.py).
 set -euo pipefail
 ROUND="${1:?usage: bash tools/round_checklist.sh <round, e.g. 06>}"
 cd "$(dirname "$0")/.."
