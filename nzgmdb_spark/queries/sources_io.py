@@ -64,7 +64,7 @@ GROUP BY o_orderstatus
 def s5_csv_roundtrip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _stage_dir(sf_dir, "orders_csv")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        orders = tbl(spark, sf_dir, "orders")
         # Column order must match the read schema: CSV is positional.
         cols = [f.split()[0] for f in ORDERS_CSV_SCHEMA.split(", ")]
         orders.select(*cols).write.mode("overwrite").option(
@@ -198,7 +198,7 @@ def s9_binary_blob_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker = os.path.join(stage, "_SUCCESS")
     if not os.path.exists(marker):
         docs = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
+            tbl(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 200)
             .select("doc_id", "text")
             .collect()

@@ -3,11 +3,37 @@
 Tables are one parquet file per name under a scale-factor directory. At
 cluster scale these would be partitioned parquet datasets; the loaders only
 depend on path globs, so the same code serves both layouts.
+
+Schema cache. Inferring a parquet schema is a one-task Spark job that reads
+the file footer (~0.1 s), and a query that reads five tables paid it five
+times per call. :func:`tbl` therefore keeps, per session, the schema Spark
+itself inferred for each table file and hands it back to the reader
+(``spark.read.schema(cached)``), which then starts no job.
+
+- **Key.** ``(applicationId, absolute path, parquet inference settings)``
+  maps to the file's ``(st_ino, st_mtime_ns, st_size)`` and the inferred
+  schema. A file rewritten or replaced at the same path no longer matches
+  its stat signature and is inferred again; so is every file after a
+  setting that changes what Spark infers (``binaryAsString``, ...).
+- **Not cached.** A path that ``os.stat`` does not resolve to a regular
+  local file is read exactly as without the cache: a missing file (which
+  still raises Spark's ``AnalysisException``), a directory dataset, a
+  remote URI.
+- **Fresh DataFrames.** Only the schema is reused, never a DataFrame: every
+  call returns a new read with its own column ids, so two results of the
+  same table self-join without ambiguity, and nothing is cached or
+  persisted in Spark.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+from nzgmdb_spark.session import session_cache_key
 
 TABLE_NAMES = (
     "region",
@@ -25,11 +51,53 @@ TABLE_NAMES = (
 # Dimension tables small enough to broadcast at any realistic scale factor.
 BROADCAST_TABLES = frozenset({"region", "nation"})
 
+# Session settings that change the schema Spark infers from a parquet footer.
+_INFERENCE_SETTINGS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+# ((applicationId, path), settings) -> ((st_ino, st_mtime_ns, st_size), schema)
+_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
+
+
+def file_signature(path: str) -> tuple[int, int, int] | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of a regular local file, else
+    None (missing file, directory dataset, remote URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return st.st_ino, st.st_mtime_ns, st.st_size
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring a local file's schema once
+    per session (see the module docstring)."""
+    sig = file_signature(path)
+    if sig is None:
+        return spark.read.parquet(path)
+    key = (
+        session_cache_key(spark, os.path.abspath(path)),
+        tuple(spark.conf.get(k) for k in _INFERENCE_SETTINGS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (sig, df.schema)
+    return df
+
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one table from a scale-factor directory."""
+    """Load one table from a scale-factor directory as a fresh DataFrame."""
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Older generator builds stored ts as TIMESTAMP(NANOS), which the
         # vectorized parquet reader rejects; newer builds store TIMESTAMP(US).
@@ -37,6 +105,7 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # when ts actually surfaces as a long, matching DuckDB's
         # TIMESTAMP_NS → TIMESTAMP coercion. The setting is scoped to this
         # read: the caller's session config is restored before returning.
+        # The fix-ups below run on every call, cached schema or not.
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
@@ -44,7 +113,7 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prev = spark.conf.get(key)
         spark.conf.set(key, "true")
         try:
-            df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            df = _read_parquet(spark, path)
         finally:
             spark.conf.set(key, prev)
         if isinstance(df.schema["ts"].dataType, T.LongType):
@@ -58,4 +127,4 @@ def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # instant type is lossless and matches DuckDB's naive TIMESTAMP.
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)

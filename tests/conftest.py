@@ -20,3 +20,17 @@ def spark():
     )
     yield s
     s.stop()
+
+
+def jobs_started(spark, fn):
+    """``(fn(), number of Spark jobs fn started on this thread)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted by jobs_started")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
