@@ -93,11 +93,12 @@ def text_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _span_stream(toks: DataFrame, hashed: bool) -> DataFrame:
-    """The (doc_id, s) span stream both the query and the growth probe
-    read: every _SPAN_K-token window at stride 1. The span key: hashed =
-    xxhash64 of the window string, computed map-side inside the explode
-    lambda so the raw text never reaches an exchange; text = the window
-    string itself (the oracle's shape). sequence() descends for stop <
+    """The (doc_id, s) span stream of :func:`_duplicate_spans`: every
+    _SPAN_K-token window at stride 1. The span key: hashed = xxhash64 of
+    the window string (the registered query), computed map-side inside the
+    explode lambda so the raw text never reaches an exchange; text = the
+    window string itself (the oracle's shape, which the tests compare the
+    hashed key against). sequence() descends for stop <
     start — guard short docs explicitly (DuckDB's generate_series is
     simply empty there)."""
     span = f"array_join(slice(w, i, {_SPAN_K}), ' ')"

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from nzgmdb_spark.operators.partitioning import spread
 from nzgmdb_spark.queries.registry import register
-from nzgmdb_spark.session import session_cache_key
+from nzgmdb_spark.session import memo
 from nzgmdb_spark.tables import tbl
 
 # --- Exact dedup: md5-hash groupBy (keep-first policy).
@@ -72,22 +72,18 @@ def _tokenized_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the tokenized corpus, repaid ~50× in shingling CPU. At
     cluster scale the same role is played by a tokenized staging table.
 
-    Session-cached via localCheckpoint (keyed by (session, sf_dir), same
-    scheme as the IVF index in queries/similarity.py): every dedup family
-    member consumes this staging table, so at cluster scale it is written
-    once per corpus drop and each dedup pass reads the materialized rows
-    instead of re-tokenizing the corpus.
+    Materialized via localCheckpoint and kept in the session memo
+    (``session.memo``) while ``documents.parquet`` is unchanged: every
+    dedup family member consumes this staging table, so at cluster scale
+    it is written once per corpus drop and each dedup pass reads the
+    materialized rows instead of re-tokenizing the corpus.
     """
-    key = session_cache_key(spark, sf_dir)
-    hit = _TOKENIZED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    df = _tokenize(spark, tbl(spark, sf_dir, "documents")).localCheckpoint()
-    _TOKENIZED_CACHE[key] = df
-    return df
-
-
-_TOKENIZED_CACHE: dict = {}
+    return memo(
+        spark,
+        ("_tokenized_docs", sf_dir),
+        [f"{sf_dir}/documents.parquet"],
+        lambda: _tokenize(spark, tbl(spark, sf_dir, "documents")).localCheckpoint(),
+    )
 
 
 def _tokenize(spark: SparkSession, docs: DataFrame) -> DataFrame:
@@ -384,15 +380,13 @@ def dedup_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def propagate_min_labels(
     edges: DataFrame,
     max_rounds: int = _CC_MAX_ROUNDS,
-    star_fallback: bool = True,
 ) -> DataFrame:
     """Min-label propagation over a symmetric (src, dst) edge list →
     (doc_id, cluster_id). Propagation needs one round per unit of
     component diameter; past ``max_rounds`` it escapes to the
     diameter-independent large/small-star contraction
     (``star_contract_labels``) rather than returning silently-wrong
-    labels. ``star_fallback=False`` restores the raise-on-divergence
-    contract for callers that want the hard stop."""
+    labels."""
     labels = (
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
@@ -426,13 +420,7 @@ def propagate_min_labels(
         # silently-wrong labels. Escape to the star contraction, whose
         # round count is logarithmic in component size, not linear in
         # diameter — the long-chain case a 100 TB near-dup graph can hit.
-        if star_fallback:
-            return star_contract_labels(edges)
-        raise RuntimeError(
-            f"connected-components propagation did not converge in "
-            f"{max_rounds} rounds (graph diameter too large); raise "
-            "max_rounds or switch to large/small-star contraction"
-        )
+        return star_contract_labels(edges)
     return labels
 
 
@@ -561,9 +549,6 @@ def _band_inline_sql() -> str:
     return f"inline(array({structs}))"
 
 
-_MINHASH_STAGE_CACHE: dict = {}
-
-
 def _md5_base(s):
     return F.conv(
         F.substring(F.md5(s.cast("binary")), 1, 13), 16, 10
@@ -571,7 +556,7 @@ def _md5_base(s):
 
 
 def _minhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-cached (doc_id, n, g, hs) signature staging table.
+    """Session-memoized (doc_id, n, g, hs) signature staging table.
 
     One md5 pass per shingle per corpus drop, materialized via
     localCheckpoint — the persisted signature staging table both minhash
@@ -580,21 +565,21 @@ def _minhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from substituting the md5 transform into the 8 per-hash min lambdas
     (lambda-scoped subtrees are excluded from subexpression elimination).
     """
-    key = session_cache_key(spark, sf_dir)
-    hit = _MINHASH_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    toks = _tokenized_docs(spark, sf_dir)
-    staged = toks.select(
-        "doc_id", _grams().alias("g")
-    ).select(
-        "doc_id",
-        F.size("g").alias("n"),
-        "g",
-        F.transform("g", _md5_base).alias("hs"),
-    ).localCheckpoint()
-    _MINHASH_STAGE_CACHE[key] = staged
-    return staged
+
+    def build() -> DataFrame:
+        toks = _tokenized_docs(spark, sf_dir)
+        return toks.select(
+            "doc_id", _grams().alias("g")
+        ).select(
+            "doc_id",
+            F.size("g").alias("n"),
+            "g",
+            F.transform("g", _md5_base).alias("hs"),
+        ).localCheckpoint()
+
+    return memo(
+        spark, ("_minhash_stage", sf_dir), [f"{sf_dir}/documents.parquet"], build
+    )
 
 
 def _minhash_cols_sql() -> str:

@@ -18,7 +18,7 @@ from nzgmdb_spark.functions import pround
 from nzgmdb_spark.operators.partitioning import spread
 from nzgmdb_spark.operators.topk import grouped_topk
 from nzgmdb_spark.queries.registry import register
-from nzgmdb_spark.session import session_cache_key
+from nzgmdb_spark.session import memo
 from nzgmdb_spark.tables import tbl
 
 _N_QUERIES = 5  # query set: vec_id < 5
@@ -381,35 +381,32 @@ QUALIFY row_number() OVER (
 """
 
 
+def _staged(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()``, kept in the session memo while ``embeddings.parquet``
+    is unchanged: the staged tables and ANN indexes below are all derived
+    from it, each materialized via localCheckpoint."""
+    return memo(spark, (name, sf_dir), [f"{sf_dir}/embeddings.parquet"], build)
+
+
 # Session-level staged wide-vector table, shared by every ANN index
 # build and the PQ rerank: one parquet scan + one decimal norm fold per
 # corpus drop, instead of once per index build / query batch. At cluster
 # scale this is the persisted "vectors" staging table every index reads.
-_WIDE_CACHE: dict = {}
-
-
 def _wide_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_cache_key(spark, sf_dir)
-    hit = _WIDE_CACHE.get(key)
-    if hit is None:
-        hit = _wide(spark, sf_dir).localCheckpoint()
-        _WIDE_CACHE[key] = hit
-    return hit
+    return _staged(
+        spark, sf_dir, "_wide_cached", lambda: _wide(spark, sf_dir).localCheckpoint()
+    )
 
 
 # Session-level materialized IVF index: (ranked assignment table, wide
 # vectors). A real IVF index is BUILT ONCE and probed by every query batch
 # — rebuilding the codebook assignment per query would be like re-training
-# an index per lookup. Keyed by (session, sf_dir); localCheckpoint pins the
-# materialized rows for the session's lifetime.
-_IVF_INDEX_CACHE: dict = {}
-
-
+# an index per lookup.
 def _ivf_index(spark: SparkSession, sf_dir: str):
-    key = session_cache_key(spark, sf_dir)
-    hit = _IVF_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _staged(spark, sf_dir, "_ivf_index", lambda: _build_ivf_index(spark, sf_dir))
+
+
+def _build_ivf_index(spark: SparkSession, sf_dir: str):
     # Assignment phase in wide form: every vector meets the BROADCAST
     # 16-row codebook once (a deliberate 16× nested-loop fan-out, not an
     # accidental cartesian — this IS the IVF indexing plan at 100 TB: the
@@ -442,7 +439,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
     ranked = ascored.withColumn(
         "rn", F.row_number().over(w_assign)
     ).localCheckpoint()
-    _IVF_INDEX_CACHE[key] = (ranked, e)
     return ranked, e
 
 
@@ -1097,15 +1093,12 @@ def _wide_sqdist(a: str, b: str) -> Column:
 # cid) table needs a join on (m, cid) plus a (q_id, vec_id) re-agg —
 # n·M·|queries| rows through an exchange per batch — while the wide row
 # meets the broadcast per-query LUT once and sums 8 array lookups in
-# place. Keyed by (session, sf_dir); localCheckpoint pins the rows.
-_PQ_INDEX_CACHE: dict = {}
-
-
+# place.
 def _pq_index(spark: SparkSession, sf_dir: str):
-    key = session_cache_key(spark, sf_dir)
-    hit = _PQ_INDEX_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _staged(spark, sf_dir, "_pq_index", lambda: _build_pq_index(spark, sf_dir))
+
+
+def _build_pq_index(spark: SparkSession, sf_dir: str):
     sub = _pq_subvectors(spark, sf_dir)
     cb = sub.filter(F.col("vec_id") < _PQ_K).select(
         "m", F.col("vec_id").alias("cid"), F.col("sv").alias("wv")
@@ -1130,9 +1123,7 @@ def _pq_index(spark: SparkSession, sf_dir: str):
             *[F.col(f"mn{k}.cid").alias(f"c{k}") for k in range(_PQ_M)],
         )
     )
-    built = (cb.localCheckpoint(), codes_w.localCheckpoint())
-    _PQ_INDEX_CACHE[key] = built
-    return built
+    return cb.localCheckpoint(), codes_w.localCheckpoint()
 
 
 # Map-side ADC sum: 8 LUT array lookups, decimal-exact accumulation
@@ -1307,21 +1298,16 @@ QUALIFY row_number() OVER (
 # build-time equi-join of the two session indexes (cell assignment ⋈
 # wide PQ codes); at cluster scale this is the table a deployment
 # PARTITIONS BY cell on disk, so a probe reads only its cells' files.
-_IVFPQ_CODES_CACHE: dict = {}
-
-
 def _ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = session_cache_key(spark, sf_dir)
-    hit = _IVFPQ_CODES_CACHE.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         ranked, _ = _ivf_index(spark, sf_dir)
         _, codes_w = _pq_index(spark, sf_dir)
         cells = ranked.filter(F.col("rn") == 1).select(
             "vec_id", F.col("c_id").alias("cell")
         )
-        hit = codes_w.join(cells, "vec_id").localCheckpoint()
-        _IVFPQ_CODES_CACHE[key] = hit
-    return hit
+        return codes_w.join(cells, "vec_id").localCheckpoint()
+
+    return _staged(spark, sf_dir, "_ivfpq_codes", build)
 
 
 @register("ann_ivf_pq", sql=IVFPQ_SQL, survey=["J14", "J15", "A1"])

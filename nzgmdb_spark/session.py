@@ -11,11 +11,20 @@ The engine targets large clusters (100 TB-class inputs); locally we run
 - UTC session timezone — the reference strips timezones on ingest
   (nzgmdb/data_retrieval/geonet.py:827); keeping the engine UTC-naive makes
   results independent of driver locale.
+
+:func:`memo` is the one per-session store of state derived from the
+warehouse files: inferred table schemas (never a table DataFrame: ``tbl``
+returns a fresh read on every call), the SQL views, and the staged
+localCheckpoint corpora and ANN indexes of the dedup and similarity queries.
 """
 
 from __future__ import annotations
 
 import os
+import stat
+import weakref
+from collections.abc import Callable, Hashable, Iterable
+from typing import Any
 
 from pyspark.sql import SparkSession
 
@@ -70,12 +79,49 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def session_cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Cache key for session-lifetime index/staging caches.
+def file_signature(path: str) -> tuple[int, int, int] | None:
+    """``(st_ino, st_mtime_ns, st_size)`` of a regular local file, else
+    None (missing file, directory dataset, remote URI)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return st.st_ino, st.st_mtime_ns, st.st_size
 
-    ``sparkContext.applicationId`` is unique per application, unlike
-    ``id(spark)``, which CPython may recycle after a stopped session is
-    garbage-collected — a recycled id would hand a new session stale
-    localCheckpoint handles pinned to a dead context.
+
+# session -> {key: (signature, value)}. Temp views and localCheckpoint handles
+# belong to one SparkSession: a new one starts empty, even at a reused id().
+_MEMO: weakref.WeakKeyDictionary[SparkSession, dict] = weakref.WeakKeyDictionary()
+
+
+def memo(
+    spark: SparkSession,
+    key: Hashable,
+    files: Iterable[str],
+    build: Callable[[], Any],
+    refresh: bool = False,
+) -> Any:
+    """``build()``, reused by this session under ``key`` while ``files``
+    are unchanged (``refresh=True`` builds regardless).
+
+    - **Signature.** ``(abspath, file_signature(abspath))`` for each of
+      ``files``, taken before ``build()`` runs, so a file rewritten during a
+      build shows as changed on the next call. An entry is a hit only while
+      its signature is unchanged; otherwise it is built again and replaced.
+    - **Not cached.** If any of ``files`` is not a regular local file, its
+      changes cannot be seen by ``os.stat``: ``build()`` runs on every call
+      and the key's entry is dropped, so it cannot outlive what it described.
     """
-    return (spark.sparkContext.applicationId, sf_dir)
+    sig = tuple((p, file_signature(p)) for p in map(os.path.abspath, files))
+    store = _MEMO.setdefault(spark, {})
+    if any(s is None for _, s in sig):
+        store.pop(key, None)
+        return build()
+    hit = store.get(key)
+    if hit is not None and hit[0] == sig and not refresh:
+        return hit[1]
+    value = build()
+    store[key] = (sig, value)
+    return value

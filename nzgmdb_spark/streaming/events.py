@@ -26,6 +26,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 
@@ -292,6 +293,15 @@ def attribution_join(
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
 
+def _committed(spark, path: str) -> bool:
+    """Whether a Spark write job has committed at ``path`` (its
+    ``_SUCCESS`` marker exists), on any Hadoop filesystem."""
+    jvm = spark.sparkContext._jvm
+    marker = jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(marker)
+
+
 def incremental_dedup_sink(
     stream: DataFrame,
     index_path: str,
@@ -312,15 +322,20 @@ def incremental_dedup_sink(
     offsets plus the idempotent keys-only index append ordering: the
     index append commits BEFORE the corpus append, so a replayed batch
     re-filters itself to empty rather than double-writing corpus rows.
+
+    The index exists once an append has committed (its ``_SUCCESS``
+    marker); it is read with the key schema the sink writes, so an index
+    that cannot be read raises instead of letting every row through.
     """
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch = batch_df.dropDuplicates([key_col])
-        try:
-            seen = spark.read.parquet(index_path).select(key_col)
+        if _committed(spark, index_path):
+            keys = T.StructType([batch.schema[key_col]])
+            seen = spark.read.schema(keys).parquet(index_path)
             novel = batch.join(seen, key_col, "left_anti")
-        except Exception:
+        else:
             novel = batch  # first batch: no index yet
         novel = novel.localCheckpoint()  # pin: two writes, one evaluation
         novel.select(key_col).write.mode("append").parquet(index_path)
@@ -361,7 +376,10 @@ def incremental_rollup_sink(
             F.sum(F.col(value_col).cast("decimal(38,6)")).alias("s"),
         )
         if os.path.exists(os.path.join(mv_path, "_SUCCESS")):
-            mv = spark.read.parquet(mv_path)
+            # read with the schema the fold below writes: no inference job
+            mv_schema = T.StructType([delta.schema[key_col]])
+            mv_schema = mv_schema.add("n", T.LongType()).add("s", T.DecimalType(38, 6))
+            mv = spark.read.schema(mv_schema).parquet(mv_path)
             merged = (
                 mv.unionByName(delta)
                 .groupBy(key_col)

@@ -6,19 +6,17 @@ depend on path globs, so the same code serves both layouts.
 
 Schema cache. Inferring a parquet schema is a one-task Spark job that reads
 the file footer (~0.1 s), and a query that reads five tables paid it five
-times per call. :func:`tbl` therefore keeps, per session, the schema Spark
-itself inferred for each table file and hands it back to the reader
+times per call. :func:`tbl` therefore keeps the schema Spark itself
+inferred for each table file in the session memo
+(:func:`nzgmdb_spark.session.memo`) and hands it back to the reader
 (``spark.read.schema(cached)``), which then starts no job.
 
-- **Key.** ``(applicationId, absolute path, parquet inference settings)``
-  maps to the file's ``(st_ino, st_mtime_ns, st_size)`` and the inferred
-  schema. A file rewritten or replaced at the same path no longer matches
-  its stat signature and is inferred again; so is every file after a
-  setting that changes what Spark infers (``binaryAsString``, ...).
-- **Not cached.** A path that ``os.stat`` does not resolve to a regular
-  local file is read exactly as without the cache: a missing file (which
-  still raises Spark's ``AnalysisException``), a directory dataset, a
-  remote URI.
+- **Key.** ``("schema", absolute path, parquet inference settings)``, with
+  the file as the entry's one dependency: a file rewritten or replaced at
+  the same path is inferred again, and so is every file after a setting
+  that changes what Spark infers (``binaryAsString``, ...). A path that is
+  not a regular local file is inferred on every call; a missing file still
+  raises Spark's ``AnalysisException``.
 - **Fresh DataFrames.** Only the schema is reused, never a DataFrame: every
   call returns a new read with its own column ids, so two results of the
   same table self-join without ambiguity, and nothing is cached or
@@ -28,12 +26,10 @@ itself inferred for each table file and hands it back to the reader
 from __future__ import annotations
 
 import os
-import stat
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
-from nzgmdb_spark.session import session_cache_key
+from nzgmdb_spark.session import memo
 
 TABLE_NAMES = (
     "region",
@@ -59,38 +55,16 @@ _INFERENCE_SETTINGS = (
     "spark.sql.legacy.parquet.nanosAsLong",
 )
 
-# ((applicationId, path), settings) -> ((st_ino, st_mtime_ns, st_size), schema)
-_SCHEMAS: dict[tuple, tuple[tuple[int, int, int], StructType]] = {}
-
-
-def file_signature(path: str) -> tuple[int, int, int] | None:
-    """``(st_ino, st_mtime_ns, st_size)`` of a regular local file, else
-    None (missing file, directory dataset, remote URI)."""
-    try:
-        st = os.stat(path)
-    except OSError:
-        return None
-    if not stat.S_ISREG(st.st_mode):
-        return None
-    return st.st_ino, st.st_mtime_ns, st.st_size
-
-
 def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, inferring a local file's schema once
     per session (see the module docstring)."""
-    sig = file_signature(path)
-    if sig is None:
-        return spark.read.parquet(path)
     key = (
-        session_cache_key(spark, os.path.abspath(path)),
+        "schema",
+        os.path.abspath(path),
         tuple(spark.conf.get(k) for k in _INFERENCE_SETTINGS),
     )
-    hit = _SCHEMAS.get(key)
-    if hit is not None and hit[0] == sig:
-        return spark.read.schema(hit[1]).parquet(path)
-    df = spark.read.parquet(path)
-    _SCHEMAS[key] = (sig, df.schema)
-    return df
+    schema = memo(spark, key, [path], lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
 
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

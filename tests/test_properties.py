@@ -159,21 +159,17 @@ def test_cosine_neardup_lsh_recall(spark):
     assert set(got) == planted  # chaff gaussians never reach cosine 0.9
 
 
-def test_cc_propagation_raises_on_deep_chain(spark):
-    # VERDICT r1 #8: a component whose diameter exceeds the round cap must
-    # never return silently-wrong labels. A 20-node path needs 19
-    # propagation rounds for label 0 to reach the far end; with the star
-    # fallback disabled that's a hard RuntimeError.
+def test_cc_propagation_converges_on_deep_chain(spark):
+    # A 20-node path needs 19 propagation rounds for label 0 to reach the
+    # far end; with enough rounds pure propagation collapses it to one
+    # cluster (past the cap, test_cc_star_contraction_escape_hatch).
     from nzgmdb_spark.queries.dedup import propagate_min_labels
 
     pairs = [(i, i + 1) for i in range(19)]
     edges = spark.createDataFrame(
         pairs + [(b, a) for a, b in pairs], schema="src long, dst long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        propagate_min_labels(edges, max_rounds=5, star_fallback=False)
-    # and with enough rounds the same chain collapses to one cluster
-    out = propagate_min_labels(edges, max_rounds=25, star_fallback=False)
+    out = propagate_min_labels(edges, max_rounds=25)
     assert {r.cluster_id for r in out.collect()} == {0}
 
 
@@ -219,9 +215,7 @@ def test_cc_star_equals_propagation_on_random_graphs(spark, pairs):
     edges = spark.createDataFrame(sym, schema="src long, dst long").localCheckpoint()
     fix = {
         r.doc_id: r.cluster_id
-        for r in propagate_min_labels(
-            edges, max_rounds=90, star_fallback=False
-        ).collect()
+        for r in propagate_min_labels(edges, max_rounds=90).collect()
     }
     star = {
         r.doc_id: r.cluster_id for r in star_contract_labels(edges).collect()

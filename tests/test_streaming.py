@@ -455,6 +455,42 @@ def test_incremental_rollup_mv_maintenance(spark, tmp_path):
         assert mv2[k].n == r.n and mv2[k].s == r.s
 
 
+def test_incremental_rollup_reads_its_mv_without_inference(spark, tmp_path):
+    # The sink reads the MV with the schema it writes. Inferring that
+    # schema would start one more job per batch; the merge itself adds
+    # exactly one shuffle over the first batch's plan.
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+    from tests.conftest import jobs_started
+
+    sink = incremental_rollup_sink(str(tmp_path / "rollup_mv"))
+    jobs = []
+    for i in range(3):
+        b = spark.createDataFrame(
+            [("click", 1.5 + i), (f"k{i}", 2.0)], "event_type string, value double"
+        )
+        jobs.append(jobs_started(spark, lambda: sink(b, i))[1])
+    assert jobs[1] == jobs[2] == jobs[0] + 1, jobs
+
+
+def test_incremental_dedup_sink_raises_on_corrupt_index(spark, tmp_path):
+    # an index that cannot be read must fail the batch, not let every row
+    # through as if nothing had been seen
+    from nzgmdb_spark.streaming.events import incremental_dedup_sink
+
+    index = tmp_path / "seen_index"
+    index.mkdir()
+    (index / "_SUCCESS").write_bytes(b"")
+    (index / "part-00000-0.snappy.parquet").write_bytes(b"not a parquet file")
+    out = tmp_path / "corpus"
+    batch = spark.createDataFrame(
+        [(1, "alpha beta")], "doc_id long, text string"
+    ).withColumn("content_hash", F.md5(F.col("text").cast("binary")))
+    sink = incremental_dedup_sink(batch, str(index), str(out))
+    with pytest.raises(Exception, match="not a Parquet file"):
+        sink(batch, 0)
+    assert not out.exists()
+
+
 def test_incremental_dedup_sink_crash_recovery(spark, tmp_path):
     """T2/T3 exactly-once under an actual kill-and-restart (round-3 review
     ask): a streaming query is stopped between micro-batches, its LAST
