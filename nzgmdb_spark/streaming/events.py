@@ -22,6 +22,7 @@ which the reference lacks entirely.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from decimal import Context, Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -344,59 +345,100 @@ def incremental_dedup_sink(
     return _process
 
 
+# The rollup MV's one file, the key of the applied batch id in its parquet
+# key-value metadata, and decimal(38,6)'s exclusive magnitude bound.
+_MV_FILE = "mv.parquet"
+_APPLIED_BATCH = b"nzgmdb.applied_batch"
+_DECIMAL_38_6_BOUND = Decimal(10) ** 32
+
+
 def incremental_rollup_sink(
     mv_path: str,
     key_col: str = "event_type",
     value_col: str = "value",
 ) -> Callable[[DataFrame, int], None]:
     """foreachBatch body that MAINTAINS a materialized rollup (count + sum
-    per key) instead of recomputing it: each micro-batch reduces to its
-    per-key delta, merges with the existing MV by summing, and swaps the
-    MV atomically (write-to-temp + rename).
+    per key) instead of recomputing it: Spark reduces each micro-batch to
+    its per-key delta (one job, handed over with ``toArrow()``), and the
+    driver folds that delta into the MV exactly (Python ``int`` counts,
+    ``Decimal`` sums at ``decimal(38,6)``).
 
     This is incremental view maintenance — the aggregate over all history
     is available at any moment at MV-read cost, while per-batch work is
-    O(batch + |MV|) with the MV at rollup grain (small by construction).
-    Replay safety: the applied batch_id is recorded WITH the MV swap, and
-    a batch whose id is <= the recorded one is skipped outright, so
-    foreachBatch's at-least-once redelivery cannot double-count.
+    O(batch) on Spark plus O(|MV|) rows on the driver, with the MV at
+    rollup grain (small by construction).
+
+    - **Layout.** ``mv_path`` is a directory holding one parquet file,
+      ``mv.parquet``, which ``spark.read.parquet`` and ``pq.read_table``
+      both read. The applied ``batch_id`` is in that file's key-value
+      metadata, so the rows and the id commit together.
+    - **Commit.** The new MV is written to a dot-prefixed temp file in
+      ``mv_path`` (which both readers skip, and which the next batch
+      overwrites) and committed by one ``os.replace``. A crash at any step
+      leaves either the old MV or the new one, never none; a batch whose
+      id is <= the recorded one is skipped outright, so foreachBatch's
+      at-least-once redelivery cannot double-count. Local filesystems
+      only (``os.replace`` is the commit).
+    - **Exactness.** Null keys and null values merge as Spark's
+      ``groupBy``/``sum`` do; a sum past ``decimal(38,6)`` raises
+      ``ArithmeticException``, as Spark's ANSI ``sum`` does, and leaves the
+      MV unchanged.
+    - **Foreign files.** Anything else in ``mv_path`` (an older layout's
+      Spark part files, say) raises instead of being read beside the MV.
     """
     import os
-    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import ArithmeticException
+
+    mv_file = os.path.join(mv_path, _MV_FILE)
+    tmp_file = os.path.join(mv_path, "." + _MV_FILE + ".tmp")
+    exact = Context(prec=39)  # two decimal(38,6) values add exactly
+
+    def _add(a, b):
+        if a is None or b is None:
+            return b if a is None else a  # sum skips nulls
+        s = exact.add(a, b)
+        if abs(s) >= _DECIMAL_38_6_BOUND:
+            raise ArithmeticException(
+                f"rollup sum {s} overflows decimal(38,6) in {mv_path}"
+            )
+        return s
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        marker = mv_path + ".applied_batch"
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if batch_id <= int(fh.read().strip()):
-                    return  # replayed batch: already folded into the MV
+        os.makedirs(mv_path, exist_ok=True)
+        foreign = sorted(
+            n for n in os.listdir(mv_path) if n != _MV_FILE and not n.startswith(".")
+        )
+        if foreign:
+            raise RuntimeError(
+                f"{mv_path} holds files besides the rollup's {_MV_FILE}: "
+                f"{foreign[:3]}; readers would count them too"
+            )
+        rollup = {}
+        if os.path.exists(mv_file):
+            mv = pq.read_table(mv_file)
+            if batch_id <= int(mv.schema.metadata[_APPLIED_BATCH]):
+                return  # replayed batch: already folded into the MV
+            rollup = dict(zip(
+                mv.column(key_col).to_pylist(),
+                zip(mv.column("n").to_pylist(), mv.column("s").to_pylist()),
+            ))
         delta = batch_df.groupBy(key_col).agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col(value_col).cast("decimal(38,6)")).alias("s"),
+        ).toArrow()
+        for k, n, s in zip(*(delta.column(c).to_pylist() for c in (key_col, "n", "s"))):
+            n0, s0 = rollup.get(k, (0, None))
+            rollup[k] = (n0 + n, _add(s0, s))
+        schema = pa.schema(
+            [delta.schema.field(key_col), ("n", pa.int64()), ("s", pa.decimal128(38, 6))],
+            metadata={_APPLIED_BATCH: str(batch_id)},
         )
-        if os.path.exists(os.path.join(mv_path, "_SUCCESS")):
-            # read with the schema the fold below writes: no inference job
-            mv_schema = T.StructType([delta.schema[key_col]])
-            mv_schema = mv_schema.add("n", T.LongType()).add("s", T.DecimalType(38, 6))
-            mv = spark.read.schema(mv_schema).parquet(mv_path)
-            merged = (
-                mv.unionByName(delta)
-                .groupBy(key_col)
-                .agg(F.sum("n").alias("n"), F.sum("s").alias("s"))
-            )
-        else:
-            merged = delta
-        # Fold to the MV schema (decimal stays exact across merges).
-        out = merged.select(
-            key_col, F.col("n").cast("long"), F.col("s").cast("decimal(38,6)")
-        )
-        tmp = mv_path + "._mv_tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(mv_path):
-            shutil.rmtree(mv_path)
-        os.rename(tmp, mv_path)
-        with open(marker, "w") as fh:
-            fh.write(str(batch_id))
+        counts = [n for n, _ in rollup.values()]
+        sums = [s for _, s in rollup.values()]
+        pq.write_table(pa.table([list(rollup), counts, sums], schema=schema), tmp_file)
+        os.replace(tmp_file, mv_file)
 
     return _process

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -455,10 +456,10 @@ def test_incremental_rollup_mv_maintenance(spark, tmp_path):
         assert mv2[k].n == r.n and mv2[k].s == r.s
 
 
-def test_incremental_rollup_reads_its_mv_without_inference(spark, tmp_path):
-    # The sink reads the MV with the schema it writes. Inferring that
-    # schema would start one more job per batch; the merge itself adds
-    # exactly one shuffle over the first batch's plan.
+def test_incremental_rollup_merge_starts_no_spark_job(spark, tmp_path):
+    # Spark computes each batch's delta; the driver merges it into the MV
+    # and writes the MV file. A merge on Spark (or an MV read that infers
+    # its schema) would make later batches start more jobs than the first.
     from nzgmdb_spark.streaming.events import incremental_rollup_sink
     from tests.conftest import jobs_started
 
@@ -469,7 +470,206 @@ def test_incremental_rollup_reads_its_mv_without_inference(spark, tmp_path):
             [("click", 1.5 + i), (f"k{i}", 2.0)], "event_type string, value double"
         )
         jobs.append(jobs_started(spark, lambda: sink(b, i))[1])
-    assert jobs[1] == jobs[2] == jobs[0] + 1, jobs
+    assert jobs[0] == jobs[1] == jobs[2], jobs
+
+
+def _rollup_batch(spark, rows):
+    return spark.createDataFrame(rows, "event_type string, value decimal(38,6)")
+
+
+def _exact_rollup(*batches):
+    """The rollup Spark's groupBy/count/sum gives over every row of
+    ``batches``: nulls form one key, and a null value counts but adds
+    nothing."""
+    out = {}
+    for rows in batches:
+        for k, v in rows:
+            n, s = out.get(k, (0, None))
+            out[k] = (n + 1, s if v is None else v if s is None else s + v)
+    return out
+
+
+def _mv_as_read(spark, mv_path):
+    """The MV as each of its two readers sees it."""
+    import pyarrow.parquet as pq
+
+    arrow = pq.read_table(mv_path)
+    by_arrow = {
+        k: (n, s)
+        for k, n, s in zip(*(arrow.column(c).to_pylist() for c in ("event_type", "n", "s")))
+    }
+    by_spark = {r.event_type: (r.n, r.s) for r in spark.read.parquet(mv_path).collect()}
+    return by_arrow, by_spark
+
+
+def _replace_then_raise(exc):
+    """An ``os.replace`` that does the replace, then raises ``exc``: a
+    crash right after the sink's commit."""
+    real_replace = os.replace
+
+    def replace(*args, **kwargs):
+        real_replace(*args, **kwargs)
+        raise exc
+
+    return replace
+
+
+_ROLLUP_DROPS = [
+    [("click", Decimal("1.5")), ("view", Decimal("10")), ("click", Decimal("2.25"))],
+    [("click", Decimal("4")), ("purchase", Decimal("7.125"))],
+    [("view", Decimal("0.000001")), ("purchase", Decimal("1"))],
+]
+
+
+@pytest.mark.parametrize("fault", ["before_temp_write", "before_replace", "after_replace"])
+def test_incremental_rollup_sink_crash_recovery(spark, tmp_path, monkeypatch, fault):
+    """The sink dies at each step of batch 1's commit; the redelivered
+    batch 1 must then count exactly once, and the MV must be readable,
+    and exact, at every point in between."""
+    import pyarrow.parquet as pq
+
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+
+    class Crash(Exception):
+        pass
+
+    def crash(*args, **kwargs):
+        raise Crash
+
+    mv_path = str(tmp_path / "rollup_mv")
+    sink = incremental_rollup_sink(mv_path)
+    b0, b1, b2 = (_rollup_batch(spark, rows) for rows in _ROLLUP_DROPS)
+    sink(b0, 0)
+    with monkeypatch.context() as m:
+        if fault == "before_temp_write":
+            m.setattr(pq, "write_table", crash)
+        else:
+            after = _replace_then_raise(Crash)
+            m.setattr(os, "replace", crash if fault == "before_replace" else after)
+        with pytest.raises(Crash):
+            sink(b1, 1)
+
+    # never missing: the old MV, or the new one once the replace is done
+    applied = _ROLLUP_DROPS[:2] if fault == "after_replace" else _ROLLUP_DROPS[:1]
+    assert _mv_as_read(spark, mv_path) == (_exact_rollup(*applied),) * 2
+    leftovers = [n for n in os.listdir(mv_path) if n.startswith(".")]
+    assert bool(leftovers) == (fault == "before_replace"), leftovers
+
+    sink(b1, 1)  # at-least-once redelivery of the batch that died
+    assert _mv_as_read(spark, mv_path) == (_exact_rollup(*_ROLLUP_DROPS[:2]),) * 2
+    sink(b2, 2)
+    assert _mv_as_read(spark, mv_path) == (_exact_rollup(*_ROLLUP_DROPS),) * 2
+    assert len(os.listdir(mv_path)) == 1  # the temp file was overwritten
+
+
+def test_incremental_rollup_sink_replays_after_query_restart(spark, tmp_path, monkeypatch):
+    """End to end: the sink dies right after committing batch 1, which
+    fails the streaming query before Spark commits the batch; a query
+    restarted from the same checkpoint redelivers batch 1 under the same
+    id, and the rollup counts it once."""
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+
+    src = tmp_path / "src"
+    src.mkdir()
+    mv_path = str(tmp_path / "rollup_mv")
+    sink = incremental_rollup_sink(mv_path)
+    seen = []
+
+    def run_available():
+        def recorded(df, batch_id):
+            seen.append(batch_id)
+            sink(df, batch_id)
+
+        q = (
+            spark.readStream.schema("event_type STRING, value DECIMAL(38,6)")
+            .json(str(src))
+            .writeStream.foreachBatch(recorded)
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+
+    def drop(i):
+        with open(src / f"drop{i}.json", "w") as f:
+            for k, v in _ROLLUP_DROPS[i]:
+                f.write(json.dumps({"event_type": k, "value": str(v)}) + "\n")
+
+    drop(0)
+    run_available()
+    drop(1)
+    with monkeypatch.context() as m:
+        m.setattr(os, "replace", _replace_then_raise(RuntimeError("sink died after its commit")))
+        with pytest.raises(Exception, match="sink died after its commit"):
+            run_available()
+    run_available()  # restart: batch 1 is delivered again
+    assert seen == [0, 1, 1]
+    assert _mv_as_read(spark, mv_path) == (_exact_rollup(*_ROLLUP_DROPS[:2]),) * 2
+
+
+def test_incremental_rollup_sum_overflow_raises_and_keeps_mv(spark, tmp_path):
+    # Spark's ANSI sum raises on a decimal(38,6) overflow; so does the
+    # driver-side merge across batches, before anything is written.
+    from pyspark.errors import ArithmeticException
+
+    from nzgmdb_spark.session import file_signature
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+
+    mv_path = str(tmp_path / "rollup_mv")
+    sink = incremental_rollup_sink(mv_path)
+    big = Decimal("60000000000000000000000000000000")  # 6e31, 32 integer digits
+    b0 = [("click", big), ("view", Decimal("1"))]
+    sink(_rollup_batch(spark, b0), 0)
+    (name,) = os.listdir(mv_path)
+    before = file_signature(os.path.join(mv_path, name))
+    with pytest.raises(ArithmeticException):
+        sink(_rollup_batch(spark, [("click", big)]), 1)
+    assert os.listdir(mv_path) == [name]
+    assert file_signature(os.path.join(mv_path, name)) == before
+    assert _mv_as_read(spark, mv_path) == (_exact_rollup(b0),) * 2
+
+
+def test_incremental_rollup_merges_null_keys_and_values_like_spark(spark, tmp_path):
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+
+    drops = [
+        [(None, Decimal("1.5")), ("a", None), ("b", None), ("c", Decimal("2"))],
+        [(None, Decimal("2.5")), ("a", None), ("b", Decimal("3")), (None, None)],
+        [("d", None)],
+    ]
+    mv_path = str(tmp_path / "rollup_mv")
+    sink = incremental_rollup_sink(mv_path)
+    frames = [_rollup_batch(spark, rows) for rows in drops]
+    for i, b in enumerate(frames):
+        sink(b, i)
+    union = frames[0].unionByName(frames[1]).unionByName(frames[2])
+    by_spark = {
+        r.event_type: (r.n, r.s)
+        for r in union.groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("s"))
+        .collect()
+    }
+    assert by_spark == _exact_rollup(*drops)
+    assert _mv_as_read(spark, mv_path) == (by_spark,) * 2
+
+
+def test_incremental_rollup_refuses_foreign_files_in_mv_path(spark, tmp_path):
+    # An MV directory in the older layout (Spark part files, _SUCCESS, a
+    # sibling .applied_batch marker) would be read beside a new MV file
+    # and double-counted: the sink must refuse it and write nothing.
+    from nzgmdb_spark.streaming.events import incremental_rollup_sink
+
+    mv_path = str(tmp_path / "rollup_mv")
+    _rollup_batch(spark, _ROLLUP_DROPS[0]).groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n"), F.sum("value").alias("s")
+    ).write.parquet(mv_path)
+    with open(mv_path + ".applied_batch", "w") as fh:
+        fh.write("0")
+    before = sorted(os.listdir(mv_path))
+    sink = incremental_rollup_sink(mv_path)
+    with pytest.raises(RuntimeError, match="holds files besides"):
+        sink(_rollup_batch(spark, _ROLLUP_DROPS[1]), 1)
+    assert sorted(os.listdir(mv_path)) == before
 
 
 def test_incremental_dedup_sink_raises_on_corrupt_index(spark, tmp_path):
